@@ -23,6 +23,7 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..observation import observed_row
 from .text import word_shingles
 
 logger = logging.getLogger(__name__)
@@ -658,52 +659,18 @@ def _edge_sig(df: DataFrame) -> tuple:
     return (row["n"], row["x"])
 
 
-def _observation_row_bounded(obs, timeout_s: float = 30.0):
-    """``Observation.get`` with a bounded wait, or ``None``.
-
-    ``Observation.get`` BLOCKS indefinitely when the observation never
-    fills (it waits; it does not raise) — e.g. if the optimizer eliminated
-    the observed subtree, so the job that would fill it never ran. The
-    eager checkpoint that precedes every call here means the observation
-    is normally filled already and the wait is zero; the helper thread is
-    the guard against the never-filled case hanging the driver."""
-    import threading  # noqa: PLC0415
-
-    box: dict = {}
-
-    def read() -> None:
-        try:
-            box["row"] = obs.get
-        except Exception as e:  # defensive: surface, don't hang
-            box["err"] = e
-
-    t = threading.Thread(target=read, daemon=True)
-    t.start()
-    t.join(timeout_s)
-    return box.get("row")
-
-
 def _checkpoint_with_sig(df: DataFrame) -> tuple[DataFrame, tuple]:
     """Eagerly localCheckpoint ``df`` and return (frame, fixpoint sig),
     riding the signature aggregates on the checkpoint job itself via
     ``observe()`` — the former separate ``agg().first()`` was one more
     full-frame driver job per CC round on top of the materialization the
     checkpoint already paid. Falls back to the direct aggregate when the
-    observation did not fill within the bounded wait (e.g. the observed
-    subtree was optimized away and no job will ever fill it — the case a
-    bare ``obs.get`` would hang on, since it waits rather than raises)."""
-    import os  # noqa: PLC0415
-
+    observed subtree was optimized away (``observed_row``)."""
     from pyspark.sql import Observation  # noqa: PLC0415
 
-    if os.environ.get("SPARK_GRAFT_CC_OBS", "1") == "0":  # A/B escape hatch
-        out = df.localCheckpoint(eager=True)
-        return out, _edge_sig(out)
     obs = Observation()
     out = df.observe(obs, *_edge_sig_cols()).localCheckpoint(eager=True)
-    row = _observation_row_bounded(obs)
-    if row is None:  # pragma: no cover — observation never filled
-        return out, _edge_sig(out)
+    row = observed_row(obs, lambda: out.agg(*_edge_sig_cols()).first())
     n, x = row["n"], row["x"]
     if x is None:  # observe skips the coalesce when no rows flowed
         x = _edge_sig(out)[1]

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..observation import observed_row
+
 RANK_SCALE = 10**12
 
 
@@ -131,12 +133,12 @@ def pagerank(
             # reads the frame anyway, so the materialization is free
             nxt = nxt.localCheckpoint(eager=True)
         if tol_e12 is not None:
-            try:
-                delta = obs.get["d"]
-            except Exception:  # pragma: no cover — observed subtree gone
-                delta = nxt.agg(
+            delta = observed_row(
+                obs,
+                lambda: nxt.agg(
                     F.sum(F.abs(F.col("r") - F.col("__r_prev"))).alias("d")
-                ).collect()[0]["d"]
+                ).first(),
+            )["d"]
             if delta is not None and delta <= tol_e12:
                 ranks = nxt
                 n_done = i + 1

@@ -820,6 +820,14 @@ def ivf_index_upsert(
     )
 
 
+def _delete_spark_path(spark, path: str) -> None:
+    """Recursively delete ``path`` through the Hadoop filesystem that
+    Spark's writers use for it (a missing path is a no-op)."""
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(p, True)  # noqa: SLF001
+
+
 def build_ivfpq_index(
     corpus: DataFrame,
     path: str,
@@ -843,6 +851,7 @@ def build_ivfpq_index(
     - ``path/cells``: (id, v, code) partitioned by cell id — ``v`` kept for
       optional exact re-rank of shortlists; a pure-PQ deployment can drop it.
     - ``path/meta``: the residual flag, so the query side self-configures.
+    - ``path/header``: the three above in one file, written last.
 
     ``residual=False`` (IVF-Flat-PQ) encodes raw vectors: the ADC table is
     query-global, one LUT serves every probed cell. ``residual=True`` is the
@@ -874,6 +883,11 @@ def build_ivfpq_index(
     else:
         enc_input = base.select("id", F.col("v").alias("__enc"))
     books = pq_train(enc_input, "id", "__enc", m, ksub, pq_iters)
+    # Queries prefer the composite header over the per-artifact files, so
+    # a header left over from the previous build must not survive into a
+    # rebuild that dies part-way: drop it before rewriting anything, and
+    # publish the new one only after every other artifact is written.
+    _delete_spark_path(spark, f"{path}/header")
     spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)],
         schema="cid int, centroid array<double>",
@@ -885,7 +899,17 @@ def build_ivfpq_index(
     spark.createDataFrame(
         [(bool(residual),)], schema="residual boolean"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    # r13: composite serving header — centroids + codebooks + meta in ONE
+    codes = pq_encode(enc_input, books, "id", "__enc")
+    (
+        base
+        .join(codes.withColumnRenamed("id", "__cid2"), F.col("id") == F.col("__cid2"))
+        .select("id", "v", "code", "cell")
+        .withColumn("batch_id", F.lit(-1))
+        .write.mode("overwrite")
+        .partitionBy("cell", "batch_id")
+        .parquet(f"{path}/cells")
+    )
+    # Composite serving header — centroids + codebooks + meta in ONE
     # small parquet, so the query/upsert paths pay one driver read instead
     # of three (each tiny read is a full job: listing + footer + collect).
     # The three individual files above stay authoritative for layout
@@ -902,16 +926,6 @@ def build_ivfpq_index(
         schema="kind string, sub int, cid int, centroid array<double>, "
         "residual boolean",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/header")
-    codes = pq_encode(enc_input, books, "id", "__enc")
-    (
-        base
-        .join(codes.withColumnRenamed("id", "__cid2"), F.col("id") == F.col("__cid2"))
-        .select("id", "v", "code", "cell")
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("cell", "batch_id")
-        .parquet(f"{path}/cells")
-    )
 
 
 def saved_index_kind(spark, path: str) -> str:

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..localframe import empty_df
 from ..model.schema import TableLayout, resource_row_schema
+from ..observation import observed_row
 from .committer import ManifestCommitter, RenameCommitter, check_backend_layout
 
 HIVE_DEFAULT = "__HIVE_DEFAULT_PARTITION__"
@@ -410,11 +411,13 @@ class LakeTable:
         # observe() rides the write job itself — no second scan of the
         # written files just to count them.
         obs = Observation()
-        data = new_rows.select(*self._data_columns()).observe(
-            obs, F.count(F.lit(1)).alias("n")
+        rows = new_rows.select(*self._data_columns())
+        rows.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(self._fs.spark_path(tmp))
+        n = int(
+            observed_row(obs, lambda: rows.agg(F.count(F.lit(1)).alias("n")).first())["n"]
         )
-        data.write.mode("overwrite").parquet(self._fs.spark_path(tmp))
-        n = int(obs.get["n"])
         self.committer.commit(tmp, part_dir)
         return n
 

@@ -1,8 +1,8 @@
 """Sync lifecycle (SURVEY §3): fullSync / deltaSync / safeDeltaSync.
 
-All three flavors funnel into one generic ``_sync`` exactly like the
-reference's ``sync(modifiedSince, safeDeltaSync)`` (``src/lib/client.js:1649``,
-entry points :1923-1941):
+All three flavors, for every target, funnel into one generic ``_sync``
+exactly like the reference's ``sync(modifiedSince, safeDeltaSync)``
+(``src/lib/client.js:1649``, entry points :1923-1941):
 
   fullSync       = _sync(full=True)        scan all → replace partition
   deltaSync      = _sync(since=watermark)  tombstones + changed rows → merge
@@ -12,6 +12,12 @@ plus the reference's operational semantics: single-flight mutex
 (client.js:1897-1915), dry-run (client.js:1808-1813), conservative watermark
 advance (client.js:1816-1843; skipped when the caller passed an explicit
 modifiedSince — README.md:174).
+
+:class:`SyncLifecycle` owns all of that once. A target plugs in through a
+two-method adapter: ``_target_keys`` (the target's keys in this sync's
+scope, for safe-delta gap detection) and ``_apply`` (apply one
+:class:`SyncBatch`, return ``rows_after``). :class:`Sri2DbSync` is the lake
+adapter; ``sync.jdbc_engine.Sri2DbJdbcSync`` is the live-database one.
 """
 
 from __future__ import annotations
@@ -19,15 +25,17 @@ from __future__ import annotations
 import datetime as dt
 import threading
 import time
-from dataclasses import dataclass, field
+import urllib.parse
+from dataclasses import KW_ONLY, dataclass, field
+from typing import ClassVar
 
-from pyspark.sql import Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..model.schema import LAYOUT_LARGE, TableLayout
+from ..observation import observed_row
 from ..operators.merge import (
     anti_join_missing,
-    dedup_latest,
     insert_if_absent,
     merge_full,
     merge_incremental,
@@ -56,6 +64,15 @@ def _ms_to_iso(ms: int) -> str:
     )
 
 
+def _count() -> Column:
+    return F.count(F.lit(1)).alias("n")
+
+
+def _batch_stats() -> list[Column]:
+    """Batch size + watermark max (B5) of a staged frame."""
+    return [_count(), F.unix_millis(F.max("modified")).alias("mx")]
+
+
 @dataclass
 class SyncResult:
     """Mirrors the reference's sync result object (client.js:1845-1848)."""
@@ -73,13 +90,28 @@ class SyncResult:
         return self.resources_synced / max(self.elapsed_ms / 1000.0, 1e-9)
 
 
+@dataclass(frozen=True)
+class SyncBatch:
+    """What one sync hands its target's ``_apply``. ``staged`` is the raw
+    feed in row shape (C1 latest-wins dedup is the target's job);
+    ``deletes`` are the tombstone keys (plain delta only); ``membership``
+    the collection's keys and ``gaps`` the keyIn-fetched rows missing from
+    both target and feed (safe delta only)."""
+
+    full: bool
+    staged: DataFrame
+    deletes: DataFrame | None = None
+    membership: DataFrame | None = None
+    gaps: DataFrame | None = None
+
+
 @dataclass
-class Sri2DbSync:
-    """One API endpoint → one lake-table partition, incrementally."""
+class SyncLifecycle:
+    """The one sync lifecycle. Subclasses declare the target (positional,
+    after ``reader``) and ``path``, and implement the two adapter methods."""
 
     reader: SriApiReader
-    table: LakeTable
-    path: str
+    _: KW_ONLY
     baseurl: str | None = None
     layout: TableLayout = LAYOUT_LARGE
     watermarks: WatermarkStore | None = None
@@ -87,24 +119,31 @@ class Sri2DbSync:
     prefer_updates_over_inserts: bool = False  # pg default, client.js:113
     deleted_not_implemented: bool = False  # README.md:78
     dry_run: bool = False
-    explain: bool = False  # print the merge's physical plan (client.js:168-179)
     # Scale path for full syncs: when set, probe $$meta.count and read the
     # collection as disjoint executor-owned offset shards of this many rows
     # (A2 offset addressing, client.js:1498-1501) instead of sequential
     # next-link paging. Requires an offset-addressable server; falls back to
     # sequential when the count probe returns nothing.
     full_sync_shard_size: int | None = None
-    # Same A2 offset sharding for the DELTA feed (r12 verdict item 4): a
-    # 100 TB deployment's modifiedSince feed can be millions of rows, and
-    # the driver-sequential next-link scan (the A4 reference-fidelity path,
-    # which stays the default) serializes it. The probe carries the same
-    # modifiedSince predicate, so the sharded read pages exactly the rows
-    # the sequential scan would; watermark stats and the merge operator are
-    # untouched. Falls back to sequential when the count probe returns
-    # nothing. The tombstone feed stays sequential — it is expand=NONE and
-    # orders of magnitude smaller than the update feed.
+    # Same A2 offset sharding for the DELTA feed: a large deployment's
+    # modifiedSince feed can be millions of rows, and the driver-sequential
+    # next-link scan (the A4 reference-fidelity path, which stays the
+    # default) serializes it. The probe carries the same modifiedSince
+    # predicate, so the sharded read pages exactly the rows the sequential
+    # scan would — provided the feed is quiescent between the count probe
+    # and the shard reads: a row deleted or inserted in between shifts the
+    # offsets, so a row can fall between two shards and the watermark can
+    # move past it. The tombstone feed stays sequential — it is expand=NONE
+    # and orders of magnitude smaller than the update feed.
     delta_sync_shard_size: int | None = None
-    _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
+    _lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
+
+    # True when the target's full merge-mode apply consumes the staged
+    # batch twice inside ONE plan, where a duplicated CollectMetrics node
+    # would double-count: that path takes its batch stats eagerly instead.
+    _full_merge_reads_batch_twice: ClassVar[bool] = False
 
     # -- public entry points (client.js:1923-1941) ---------------------------
 
@@ -124,12 +163,23 @@ class Sri2DbSync:
             "safeDeltaSync": self.safe_delta_sync,
         }[synctype]()
 
+    # -- the target adapter ---------------------------------------------------
+
+    def _target_keys(self) -> DataFrame:
+        """The target's key columns within this sync's scope."""
+        raise NotImplementedError
+
+    def _apply(self, batch: SyncBatch) -> int:
+        """Merge ``batch`` into the target (or roll back on a dry run) and
+        return the scope's row count afterwards."""
+        raise NotImplementedError
+
     # -- lifecycle ------------------------------------------------------------
 
-    def _keys(self) -> tuple[str, ...]:
-        return self.layout.key_columns
+    def _scope_path(self) -> str:
+        return self.path.split("?")[0]
 
-    def _stage(self, pages_df, ingest_ts=None):
+    def _stage(self, pages_df, ingest_ts) -> DataFrame:
         """repair (B2) + project (B3) a raw (href, resource) scan to row shape.
 
         ``ingest_ts`` is the sync's fixed driver-side ingest timestamp: the
@@ -141,7 +191,32 @@ class Sri2DbSync:
             repair_resources(pages_df, ingest_ts),
             self.layout,
             self.baseurl,
-            self.path.split("?")[0],
+            self._scope_path(),
+        )
+
+    def _read_feed(self, modified_since: str | None) -> DataFrame:
+        """The update feed (A1/A4/A6), full when ``modified_since`` is None.
+
+        With this sync type's shard size set and a server that reports
+        ``$$meta.count``, the feed is read as executor-side offset shards
+        (A2); otherwise by driver-sequential next-link paging. For a delta
+        the predicate lives in the path, so probe and shards page the
+        identical filtered collection the sequential scan would."""
+        shard = (
+            self.delta_sync_shard_size if modified_since else self.full_sync_shard_size
+        )
+        if shard:
+            path = self.path
+            if modified_since:
+                sep = "&" if "?" in path else "?"
+                path = f"{path}{sep}modifiedSince={urllib.parse.quote(modified_since)}"
+            total = self.reader.probe_count(path)
+            if total:
+                return self.reader.read_offset_sharded(
+                    path, total_count=total, shard_size=shard
+                )
+        return self.reader.read_collection(
+            self.path, modified_since=modified_since, expand="FULL"
         )
 
     def _sync(self, modified_since: str | None, full: bool, safe: bool = False) -> SyncResult:
@@ -150,11 +225,11 @@ class Sri2DbSync:
         if not self._lock.acquire(blocking=False):
             return SyncResult("REJECTED", 0, 0, -1, 0, self.dry_run)
         try:
-            return self._inner_sync(modified_since, full, safe)
+            return self._run(modified_since, full, safe)
         finally:
             self._lock.release()
 
-    def _inner_sync(self, modified_since: str | None, full: bool, safe: bool) -> SyncResult:
+    def _run(self, modified_since: str | None, full: bool, safe: bool) -> SyncResult:
         syncstart = _now_ms()
         synctype = "FULL" if full else ("SAFEDELTA" if safe else "DELTA")
         explicit_since = modified_since is not None
@@ -162,168 +237,90 @@ class Sri2DbSync:
         ingest = F.lit(
             dt.datetime.fromtimestamp(syncstart / 1000.0, tz=dt.timezone.utc)
         )
+        keys = self.layout.key_columns
 
         prev_wm_ms = prev_start_ms = None
         if not full and self.watermarks is not None:
             prev_wm_ms, prev_start_ms = self.watermarks.get(
-                self.tablename, self.baseurl, self.path.split("?")[0], synctype
+                self.tablename, self.baseurl, self._scope_path(), synctype
             )
         if not full and modified_since is None:
             # cold-start watermark 1900-01-01 (client.js:1590-1598)
             modified_since = _ms_to_iso(prev_wm_ms if prev_wm_ms is not None else COLD_START_MILLIS)
 
-        keys = self._keys()
-        target = self.table.read_partition(self.baseurl, self.path.split("?")[0])
-
-        # Phase 0 (delta only): tombstone scan (A5, client.js:1726-1741).
+        # Tombstone scan (A5, client.js:1726-1741), plain delta only.
         # Deliberately skipped on safeDeltaSync, exactly like the reference
         # (client.js:1726: !isFullSync && !isSafeDeltaSync) — membership
         # reconciliation already covers deletions there; the extra scan would
-        # be a full wasted API pass per safe sync.
-        deletes_df = None
-        obs_deletes = None
-        n_deletes = 0
+        # be a full wasted API pass per safe sync. The count rides the job
+        # that applies the tombstones (observe), not an eager count().
+        deletes = deletes_pre = obs_deletes = None
         if not full and not safe and not self.deleted_not_implemented:
             raw_deletes = self.reader.read_collection(
                 self.path, modified_since=modified_since, expand="NONE", deleted=True
             )
             deletes_pre = self._stage(raw_deletes, ingest).select(*keys)
-            # the tombstone count rides the merge job (observe) instead of
-            # an eager count() that would evaluate the staging chain twice
             obs_deletes = Observation()
-            deletes_df = deletes_pre.observe(
-                obs_deletes, F.count(F.lit(1)).alias("n")
-            )
+            deletes = deletes_pre.observe(obs_deletes, _count())
 
-        # Scan + stage (A1/A4/A6 → B1/B2/B3); full syncs optionally use the
-        # distributed offset-sharded scan (A2) — executor-side paging over
-        # disjoint ranges — instead of driver-sequential next links.
-        raw = None
-        if full and self.full_sync_shard_size:
-            total = self.reader.probe_count(self.path)
-            if total is not None and total > 0:
-                raw = self.reader.read_offset_sharded(
-                    self.path, total_count=total, shard_size=self.full_sync_shard_size
-                )
-        elif not full and self.delta_sync_shard_size and modified_since:
-            # A2 offset sharding over the modifiedSince-filtered feed: the
-            # predicate lives in the path, so probe and shards page the
-            # identical filtered collection the sequential scan would.
-            import urllib.parse  # noqa: PLC0415
-
-            sep = "&" if "?" in self.path else "?"
-            dpath = (
-                f"{self.path}{sep}modifiedSince="
-                f"{urllib.parse.quote(modified_since)}"
-            )
-            total = self.reader.probe_count(dpath)
-            if total is not None and total > 0:
-                raw = self.reader.read_offset_sharded(
-                    dpath, total_count=total, shard_size=self.delta_sync_shard_size
-                )
-        if raw is None:
-            raw = self.reader.read_collection(
-                self.path, modified_since=None if full else modified_since, expand="FULL"
-            )
-        staged = self._stage(raw, ingest)
-        # Batch size + watermark max (B5) ride the merge/write job via
-        # observe(): the staged scan — at scale a full distributed API read
-        # (read_offset_sharded pages inside executor Python workers) — is
-        # computed ONCE instead of once for the stats and again for the
-        # merge. Exception: merge-mode full sync consumes the staged frame
-        # twice inside ONE plan (semi-join + upsert), where a duplicated
-        # CollectMetrics node would double-count — that path keeps the
-        # eager aggregate (its staged side is also the one the C3
-        # delete-all default avoids entirely).
-        obs_staged = None
-        n_staged = last_seen_ms = None
-        staged_pre = staged
-        if full and self.prefer_updates_over_inserts:
-            stats = staged.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.unix_millis(F.max("modified")).alias("mx"),
-            ).first()
-            n_staged, last_seen_ms = stats["n"], stats["mx"]
+        # Scan + stage (A1/A2/A4/A6 → B1/B2/B3). Batch stats ride the
+        # target's write job via observe(): the staged scan — at scale a
+        # distributed API read (read_offset_sharded pages inside executor
+        # Python workers) — is computed ONCE instead of once for the stats
+        # and again for the merge.
+        staged_pre = self._stage(
+            self._read_feed(None if full else modified_since), ingest
+        )
+        stats = obs_staged = None
+        staged = staged_pre
+        if full and self.prefer_updates_over_inserts and self._full_merge_reads_batch_twice:
+            stats = staged_pre.agg(*_batch_stats()).first()
         else:
             obs_staged = Observation()
-            staged = staged.observe(
-                obs_staged,
-                F.count(F.lit(1)).alias("n"),
-                F.unix_millis(F.max("modified")).alias("mx"),
-            )
+            staged = staged_pre.observe(obs_staged, *_batch_stats())
 
-        # Merge (C1-C6)
-        if full:
-            merged = merge_full(
-                target, staged, keys, self.prefer_updates_over_inserts
+        def staged_stats():
+            return observed_row(
+                obs_staged, lambda: staged_pre.agg(*_batch_stats()).first()
             )
-        else:
-            merged = merge_incremental(target, staged, deletes_df, keys)
-
-        def _resolve_staged_stats() -> None:
-            # pull the observed batch stats once the first action on the
-            # merged plan has run (observe fills on that job). When the
-            # optimizer proved the staged input EMPTY and eliminated the
-            # observed subtree (PropagateEmptyRelation — e.g. a delta with
-            # no changes), the observation never fills and .get raises;
-            # fall back to the direct aggregate, which is trivial exactly
-            # in that case.
-            nonlocal n_staged, last_seen_ms
-            if obs_staged is not None and n_staged is None:
-                try:
-                    row = obs_staged.get
-                    n_staged, last_seen_ms = row["n"], row["mx"]
-                except Exception:
-                    stats = staged_pre.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.unix_millis(F.max("modified")).alias("mx"),
-                    ).first()
-                    n_staged, last_seen_ms = stats["n"], stats["mx"]
 
         # Safe-delta membership reconciliation (A7/C7/C8/C9/A3,
-        # client.js:1776-1805) against the post-merge contents.
-        gap_rows = None
+        # client.js:1776-1805): members absent from both the target and the
+        # feed are gaps (C8). The gap list is unbounded after an outage, so
+        # it never materializes on the driver: executor-side keyIn fetch
+        # (A3) over the missing hrefs, persisted because both the watermark
+        # stats and the apply consume it.
+        membership = gaps = gap_max = None
+        n_missing = 0
         if safe:
             membership_raw = self.reader.read_collection(self.path, expand="NONE")
-            membership = self._stage(membership_raw, ingest).select(*keys)
-            missing = anti_join_missing(membership, merged, keys)  # C8
-            # The gap list is unbounded after an outage, so it never
-            # materializes on the driver: executor-side keyIn fetch (A3)
-            # over the missing hrefs, persisted because both the watermark
-            # stats and the merge consume it.
+            membership = self._stage(membership_raw, ingest).select(*keys).persist()
+            known = self._target_keys().unionByName(staged.select(*keys))
+            missing = anti_join_missing(membership, known, keys)
             n_missing = missing.count()
-            _resolve_staged_stats()  # filled by the count above
+            stats = staged_stats()  # filled by the count above
             if n_missing:
                 fetched = self.reader.get_hrefs_distributed(
                     self.path, missing.select("href")
-                )  # A3
-                gap_rows = self._stage(fetched, ingest).persist()
-                merged = insert_if_absent(merged, gap_rows, keys)  # C9
-                n_staged += n_missing
-                gap_max = max_modified_millis(gap_rows)
-                if gap_max is not None:
-                    last_seen_ms = max(last_seen_ms or gap_max, gap_max)
-            merged = set_difference_delete(merged, membership, keys)  # C7
+                )
+                gaps = self._stage(fetched, ingest).persist()
+                gap_max = max_modified_millis(gaps)
 
-        # EXPLAIN instrumentation hook (client.js:168-179)
-        if self.explain:
-            merged.explain("formatted")
-
-        # Commit or dry-run rollback (D6, client.js:1808-1813)
-        if self.dry_run:
-            rows_after = merged.count()
-        else:
-            rows_after = self.table.replace_partition(
-                merged, self.baseurl, self.path.split("?")[0]
-            )
-        if gap_rows is not None:
-            gap_rows.unpersist()
-        _resolve_staged_stats()  # filled by the write / dry-run count
+        # Merge + commit, or dry-run rollback (C1-C9, D6)
+        rows_after = self._apply(SyncBatch(full, staged, deletes, membership, gaps))
+        for df in (membership, gaps):
+            if df is not None:
+                df.unpersist()
+        if stats is None:
+            stats = staged_stats()  # filled by the apply's write
+        n_staged = stats["n"] + n_missing
+        seen = [ms for ms in (stats["mx"], gap_max) if ms is not None]
+        last_seen_ms = max(seen) if seen else None
+        n_deletes = 0
         if obs_deletes is not None:
-            try:
-                n_deletes = obs_deletes.get["n"]
-            except Exception:  # observed subtree optimized away (empty feed)
-                n_deletes = deletes_pre.count()
+            n_deletes = observed_row(
+                obs_deletes, lambda: deletes_pre.agg(_count()).first()
+            )["n"]
 
         # Watermark advance (B6) — skipped on explicit modifiedSince
         # (client.js:1816, README.md:174) and on dry runs.
@@ -337,7 +334,7 @@ class Sri2DbSync:
                 self.watermarks.put(
                     self.tablename,
                     self.baseurl,
-                    self.path.split("?")[0],
+                    self._scope_path(),
                     synctype,
                     new_wm,
                     syncstart,
@@ -352,3 +349,42 @@ class Sri2DbSync:
             dry_run=self.dry_run,
             watermark_ms=new_wm,
         )
+
+
+@dataclass
+class Sri2DbSync(SyncLifecycle):
+    """One API endpoint → one lake-table partition, incrementally."""
+
+    table: LakeTable
+    path: str
+    _: KW_ONLY
+    explain: bool = False  # print the merge's physical plan (client.js:168-179)
+
+    # merge-mode merge_full semi-joins AND upserts the staged batch
+    _full_merge_reads_batch_twice: ClassVar[bool] = True
+
+    def _target(self) -> DataFrame:
+        return self.table.read_partition(self.baseurl, self._scope_path())
+
+    def _target_keys(self) -> DataFrame:
+        return self._target().select(*self.layout.key_columns)
+
+    def _apply(self, batch: SyncBatch) -> int:
+        keys = self.layout.key_columns
+        target = self._target()
+        if batch.full:
+            merged = merge_full(
+                target, batch.staged, keys, self.prefer_updates_over_inserts
+            )
+        else:
+            merged = merge_incremental(target, batch.staged, batch.deletes, keys)
+        if batch.gaps is not None:
+            merged = insert_if_absent(merged, batch.gaps, keys)  # C9
+        if batch.membership is not None:
+            merged = set_difference_delete(merged, batch.membership, keys)  # C7
+        # EXPLAIN instrumentation hook (client.js:168-179)
+        if self.explain:
+            merged.explain("formatted")
+        if self.dry_run:
+            return merged.count()
+        return self.table.replace_partition(merged, self.baseurl, self._scope_path())

@@ -1,69 +1,50 @@
-"""Sync engine targeting a LIVE JDBC database — the reference's actual
+"""Live-JDBC target of the sync lifecycle — the reference's actual
 deployment shape (API → staging table → one-transaction server-side merge
 into Postgres/MSSQL resource tables, ``src/lib/client.js:871-1239``).
 
-Split of work, Spark-first:
-- executors fetch + stage + C1-dedup the batch (DataFrame ops, one window);
-- ``df.write.jdbc`` bulk-inserts the staging table (A8 batching);
-- the driver executes the generated merge statements (C2-C6 as SQL) inside
-  ONE transaction (D6); dry-run rolls back (client.js:1808-1813).
+The lifecycle (entry points, single-flight, watermarks, feed reads, batch
+stats, safe-delta gap fetch) is ``sync.engine.SyncLifecycle``; this module
+is only the target adapter:
 
-Unlike the lake engine, the target's current rows are never pulled through
-Spark: change detection (C5), anti-join deletes (C2), and insert-if-absent
-(C6) run server-side where the data already lives. Watermarks reuse the
-same store/advance logic as the lake engine. Safe-delta reconciliation
-(C7-C9) splits naturally: gap DETECTION is a Spark anti-join over just the
-key columns (membership snapshot vs target keys read via a pruned JDBC
-query), gap FETCH is the distributed keyIn reader, and the set-difference
-DELETE (C7) executes server-side against the staged membership table.
+- ``_apply``: ``df.write.jdbc`` bulk-inserts the C1-deduped batch (and the
+  tombstone / membership keys) into per-run staging tables (A8 batching),
+  then the driver executes the generated merge statements (C2-C9 as SQL)
+  inside ONE transaction (D6); dry-run rolls back (client.js:1808-1813);
+- ``_target_keys``: a pruned JDBC read of the target's key columns, the
+  only time target data enters Spark (safe-delta gap detection).
+
+Change detection (C5), anti-join deletes (C2), insert-if-absent (C6) and
+the set-difference DELETE (C7) run server-side where the data lives.
 """
 
 from __future__ import annotations
 
-import datetime as dt
-import threading
 import uuid
 import zlib
-from dataclasses import dataclass, field
+from dataclasses import KW_ONLY, dataclass
 
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..model.schema import LAYOUT_LARGE, TableLayout
 from ..operators.merge import dedup_latest
-from ..operators.normalize import project_to_row, repair_resources
-from ..operators.watermark import (
-    COLD_START_MILLIS,
-    WatermarkStore,
-    advance_watermark,
-)
-from ..operators.merge import anti_join_missing
 from ..sinks.jdbc import (
     JdbcResourceSink,
     generate_delta_sync_sql,
     generate_full_sync_sql,
     generate_safe_delta_sql,
 )
-from ..sources.sri_api import SriApiReader
-from .engine import SyncResult, _ms_to_iso, _now_ms
+from .engine import SyncBatch, SyncLifecycle
 
 
 @dataclass
-class Sri2DbJdbcSync:
+class Sri2DbJdbcSync(SyncLifecycle):
     """One API endpoint → one live JDBC resource table, incrementally."""
 
-    reader: SriApiReader
     sink: JdbcResourceSink
     path: str
-    baseurl: str | None = None
-    layout: TableLayout = LAYOUT_LARGE
-    watermarks: WatermarkStore | None = None
-    tablename: str = "resources"
+    _: KW_ONLY
     staging_table: str | None = None
     staging_column_types: str | None = None
     prefer_updates_over_inserts: bool = True  # mssql default (client.js:113)
-    deleted_not_implemented: bool = False
-    dry_run: bool = False
-    _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
 
     def __post_init__(self) -> None:
         if self.staging_table is None:
@@ -74,234 +55,97 @@ class Sri2DbJdbcSync:
             # scope — a second endpoint syncing into the same database would
             # otherwise drop/overwrite the first one's staging mid-merge.
             # Deterministic per scope so leftovers are identifiable; each
-            # RUN additionally suffixes a nonce (see _inner) so two drivers
+            # RUN additionally suffixes a nonce (see _apply) so two drivers
             # racing on the SAME scope stay isolated too.
-            scope = f"{self.sink.target_table}|{self.baseurl}|{self._clean_path()}"
+            scope = f"{self.sink.target_table}|{self.baseurl}|{self._scope_path()}"
             self.staging_table = f"stg_sri2db_{zlib.crc32(scope.encode()):08x}"
-
-    def full_sync(self) -> SyncResult:
-        return self._sync(None, full=True)
-
-    def delta_sync(self, modified_since: str | None = None) -> SyncResult:
-        return self._sync(modified_since, full=False)
-
-    def safe_delta_sync(self, modified_since: str | None = None) -> SyncResult:
-        return self._sync(modified_since, full=False, safe=True)
-
-    def configured_sync(self, synctype: str = "deltaSync") -> SyncResult:
-        return {
-            "fullSync": self.full_sync,
-            "deltaSync": self.delta_sync,
-            "safeDeltaSync": self.safe_delta_sync,
-        }[synctype]()
-
-    # -- internals -----------------------------------------------------------
-
-    def _clean_path(self) -> str:
-        return self.path.split("?")[0]
-
-    def _stage(self, pages_df, ingest_ts):
-        return project_to_row(
-            repair_resources(pages_df, ingest_ts),
-            self.layout,
-            self.baseurl,
-            self._clean_path(),
-        )
 
     def _scope(self) -> dict[str, str | None]:
         scope: dict[str, str | None] = {}
         if self.layout.has_baseurl:
             scope["baseurl"] = self.baseurl
         if self.layout.has_path:
-            scope["path"] = self._clean_path()
+            scope["path"] = self._scope_path()
         return scope
+
+    def _scope_predicate(self) -> str:
+        return " AND ".join(
+            f'"{c}" IS NULL' if v is None else "\"" + c + "\" = '" + v.replace("'", "''") + "'"
+            for c, v in self._scope().items()
+        ) or "1=1"
 
     def _count_scope(self) -> int:
         conn = self.sink._connection()  # noqa: SLF001
         try:
-            pred = " AND ".join(
-                f'"{c}" IS NULL' if v is None else "\"" + c + "\" = '" + v.replace("'", "''") + "'"
-                for c, v in self._scope().items()
-            ) or "1=1"
             rs = conn.createStatement().executeQuery(
-                f"SELECT COUNT(*) FROM {self.sink.target_table} WHERE {pred}"
+                f"SELECT COUNT(*) FROM {self.sink.target_table} "
+                f"WHERE {self._scope_predicate()}"
             )
             rs.next()
             return int(rs.getLong(1))
         finally:
             conn.close()
 
-    def _target_keys(self):
+    def _target_keys(self) -> DataFrame:
         """Pruned JDBC read of the target's key columns within this sync's
-        scope — the only time target data enters Spark, and it is keys-only
-        (the scope predicate and the projection both push into the query)."""
+        scope (the scope predicate and the projection both push into the
+        query)."""
         cols = ", ".join(f'"{c}"' for c in self.layout.key_columns)
-        pred = " AND ".join(
-            f'"{c}" IS NULL' if v is None else "\"" + c + "\" = '" + v.replace("'", "''") + "'"
-            for c, v in self._scope().items()
-        ) or "1=1"
-        q = f"(SELECT {cols} FROM {self.sink.target_table} WHERE {pred}) tk"
+        q = (
+            f"(SELECT {cols} FROM {self.sink.target_table} "
+            f"WHERE {self._scope_predicate()}) tk"
+        )
         return self.sink.spark.read.jdbc(self.sink.url, q, properties=self.sink.properties)
 
-    def _sync(self, modified_since: str | None, full: bool, safe: bool = False) -> SyncResult:
-        if not self._lock.acquire(blocking=False):
-            return SyncResult("REJECTED", 0, 0, -1, 0, self.dry_run)
-        try:
-            return self._inner(modified_since, full, safe)
-        finally:
-            self._lock.release()
-
-    def _inner(self, modified_since: str | None, full: bool, safe: bool = False) -> SyncResult:
+    def _apply(self, batch: SyncBatch) -> int:
         # Per-run staging names + guaranteed drop: the closest regular-table
         # analog to the reference's session-temp tables (created per sync,
         # gone when it ends, client.js:806-843 + ON COMMIT DROP). Two
         # drivers syncing the same scope concurrently each stage into their
         # own tables; only hard-killed runs leave stg_<scope>_<nonce>
         # leftovers, identifiable by their scope prefix.
-        run_staging = f"{self.staging_table}_{uuid.uuid4().hex[:8]}"
-        staged_tables: list[str] = []
+        run = f"{self.staging_table}_{uuid.uuid4().hex[:8]}"
+        keys = self.layout.key_columns
+        key_types = ", ".join(f"{c} VARCHAR(2048)" for c in keys)
+        written: list[str] = []
+
+        def stage(df: DataFrame | None, table: str, types: str | None) -> str | None:
+            if df is None:
+                return None
+            # register BEFORE writing: a bulk insert that dies after
+            # creating the table must still get its table dropped in the
+            # finally (drop_tables tolerates a never-created one)
+            written.append(table)
+            self.sink.write_staging(df, table, types)
+            return table
+
         try:
-            return self._run(modified_since, full, safe, run_staging, staged_tables)
+            deletes_table = stage(batch.deletes, run + "_del", key_types)
+            membership_table = stage(batch.membership, run + "_m", key_types)
+            rows = batch.staged
+            if batch.gaps is not None:
+                rows = rows.unionByName(batch.gaps)  # C9 via the upsert merge
+            # the ANSI merge requires C1-deduped staging (one window here)
+            stage(dedup_latest(rows, keys), run, self.staging_column_types)
+
+            # One-transaction server-side merge (C2-C9 / D6)
+            if membership_table is not None:
+                stmts = generate_safe_delta_sql(
+                    self.sink.target_table, run, membership_table,
+                    self.layout, self._scope(), self.sink.dialect,
+                )
+            elif batch.full:
+                stmts = generate_full_sync_sql(
+                    self.sink.target_table, run, self.layout, self._scope(),
+                    self.prefer_updates_over_inserts, self.sink.dialect,
+                )
+            else:
+                stmts = generate_delta_sync_sql(
+                    self.sink.target_table, run, deletes_table,
+                    self.layout, self.sink.dialect,
+                )
+            self.sink.merge(stmts, dry_run=self.dry_run)
+            return self._count_scope()
         finally:
-            if staged_tables:
-                self.sink.drop_tables(staged_tables)
-
-    def _run(
-        self,
-        modified_since: str | None,
-        full: bool,
-        safe: bool,
-        run_staging: str,
-        staged_tables: list[str],
-    ) -> SyncResult:
-        syncstart = _now_ms()
-        synctype = "FULL" if full else ("SAFEDELTA" if safe else "DELTA")
-        explicit_since = modified_since is not None
-        ingest = F.lit(
-            dt.datetime.fromtimestamp(syncstart / 1000.0, tz=dt.timezone.utc)
-        )
-
-        prev_wm_ms = prev_start_ms = None
-        if not full and self.watermarks is not None:
-            prev_wm_ms, prev_start_ms = self.watermarks.get(
-                self.tablename, self.baseurl, self._clean_path(), synctype
-            )
-        if not full and modified_since is None:
-            modified_since = _ms_to_iso(
-                prev_wm_ms if prev_wm_ms is not None else COLD_START_MILLIS
-            )
-
-        # Tombstone scan (A5) — plain delta only; safe delta skips it like
-        # the reference (client.js:1726) — membership covers deletions
-        n_deletes = 0
-        deletes_table = None
-        if not full and not safe and not self.deleted_not_implemented:
-            raw_deletes = self.reader.read_collection(
-                self.path, modified_since=modified_since, expand="NONE", deleted=True
-            )
-            ddf = self._stage(raw_deletes, ingest).select(*self.layout.key_columns)
-            n_deletes = ddf.count()
-            if n_deletes:
-                deletes_table = run_staging + "_del"
-                key_types = ", ".join(
-                    f"{c} VARCHAR(2048)" for c in self.layout.key_columns
-                )
-                # register BEFORE writing: a bulk insert that dies after
-                # creating the table must still get its table dropped in the
-                # finally (drop_tables tolerates a never-created one)
-                staged_tables.append(deletes_table)
-                self.sink.write_staging(ddf, deletes_table, key_types)
-
-        # Scan + stage + C1 dedup (Spark-side: one window — the ANSI merge
-        # requires deduped staging and it's cheaper here anyway)
-        raw = self.reader.read_collection(
-            self.path, modified_since=None if full else modified_since, expand="FULL"
-        )
-        staged = dedup_latest(self._stage(raw, ingest), self.layout.key_columns)
-
-        # Safe-delta reconciliation (A7/C8/C9/A3): membership snapshot →
-        # Spark anti-join against (target keys ∪ staged keys) → distributed
-        # keyIn fetch of the gaps → unioned into the staged batch
-        membership_table = None
-        if safe:
-            keys = list(self.layout.key_columns)
-            membership_raw = self.reader.read_collection(self.path, expand="NONE")
-            membership = self._stage(membership_raw, ingest).select(*keys).persist()
-            membership_table = run_staging + "_m"
-            key_types = ", ".join(f"{c} VARCHAR(2048)" for c in keys)
-            staged_tables.append(membership_table)
-            self.sink.write_staging(membership, membership_table, key_types)
-            known = self._target_keys().unionByName(staged.select(*keys))
-            missing = anti_join_missing(membership, known, keys)  # C8
-            if missing.limit(1).count():
-                fetched = self.reader.get_hrefs_distributed(
-                    self.path, missing.select("href")
-                )  # A3
-                gap_rows = self._stage(fetched, ingest)
-                staged = dedup_latest(
-                    staged.unionByName(gap_rows), self.layout.key_columns
-                )  # C9 via the upsert merge
-            membership.unpersist()
-
-        stats = staged.agg(
-            F.count(F.lit(1)).alias("n"), F.unix_millis(F.max("modified")).alias("mx")
-        ).first()
-        n_staged, last_seen_ms = stats["n"], stats["mx"]
-        staged_tables.append(run_staging)
-        self.sink.write_staging(staged, run_staging, self.staging_column_types)
-
-        # One-transaction server-side merge (C2-C9 / D6)
-        if safe:
-            stmts = generate_safe_delta_sql(
-                self.sink.target_table,
-                run_staging,
-                membership_table,
-                self.layout,
-                self._scope(),
-                self.sink.dialect,
-            )
-        elif full:
-            stmts = generate_full_sync_sql(
-                self.sink.target_table,
-                run_staging,
-                self.layout,
-                self._scope(),
-                self.prefer_updates_over_inserts,
-                self.sink.dialect,
-            )
-        else:
-            stmts = generate_delta_sync_sql(
-                self.sink.target_table,
-                run_staging,
-                deletes_table,
-                self.layout,
-                self.sink.dialect,
-            )
-        self.sink.merge(stmts, dry_run=self.dry_run)
-        rows_after = self._count_scope()
-
-        syncend = _now_ms()
-        new_wm = None
-        if not explicit_since and self.watermarks is not None and not self.dry_run:
-            new_wm = advance_watermark(
-                last_seen_ms, prev_wm_ms, prev_start_ms, syncstart, syncend
-            )
-            if new_wm is not None:
-                self.watermarks.put(
-                    self.tablename,
-                    self.baseurl,
-                    self._clean_path(),
-                    synctype,
-                    new_wm,
-                    syncstart,
-                )
-
-        return SyncResult(
-            synctype=synctype,
-            resources_synced=n_staged,
-            deletes_synced=n_deletes,
-            rows_after=rows_after,
-            elapsed_ms=syncend - syncstart,
-            dry_run=self.dry_run,
-            watermark_ms=new_wm,
-        )
+            if written:
+                self.sink.drop_tables(written)

@@ -171,7 +171,7 @@ def _replay_dialect(
         if op in ("update", "touch", "add") and href in api.resources:
             touched[href] = api.resources[href]
     # the engine C1-dedups staging Spark-side BEFORE the merge runs
-    # ("the ANSI merge requires deduped staging", sync/jdbc_engine.py:215-220),
+    # ("the ANSI merge requires C1-deduped staging", sync/jdbc_engine.py:128),
     # so stg_upd carries exactly one row per key here; the page-shift
     # duplicate is injected on the FULL path below, whose generated
     # statement dedups inline (ROW_NUMBER ... rn = 1)
@@ -194,7 +194,7 @@ def _replay_dialect(
         # a row ABSENT from the target: that exercises the statement's own
         # inline ROW_NUMBER dedup on the insert path — a duplicate of an
         # existing row would instead hit the UPDATE, which (like the
-        # engine) assumes C1-deduped staging (sync/jdbc_engine.py:215-220)
+        # engine) assumes C1-deduped staging (sync/jdbc_engine.py:128)
         fresh = [h for h in api.resources if h not in pre]
         if fresh and rng.random() < 0.5:
             full_rows.append(

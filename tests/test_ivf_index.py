@@ -583,3 +583,47 @@ def test_mass_delete_join_path_end_to_end(spark, monkeypatch):
         assert not {r["neighbor_id"] for r in res.collect()} & set(victims)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_ivfpq_rebuild_crash_never_serves_the_old_header(spark, monkeypatch):
+    """A rebuild that dies after its first artifact write must not leave
+    the previous build's composite header behind: queries prefer the
+    header, so they would silently pair old centroids and codebooks with
+    the new artifacts. The header is dropped before anything is rewritten,
+    and the query-side loader falls back to the fresh per-artifact files."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    emb = _tp(spark, SF, "embeddings").filter(F.col("vec_id") < 400)
+    tmp = tempfile.mkdtemp(prefix="ivfpq_crash_")
+    try:
+        S.build_ivfpq_index(emb, tmp, nlist=4, m=4, ksub=16, pq_iters=1)
+        old_centroids, _, _ = S._load_ivfpq_constants(spark, tmp)
+        assert len(old_centroids) == 4
+        assert os.path.isdir(os.path.join(tmp, "header"))
+
+        real_parquet = DataFrameWriter.parquet
+
+        def dying_parquet(self, path, *a, **kw):
+            real_parquet(self, path, *a, **kw)
+            if path.endswith("/centroids"):
+                raise RuntimeError("crash after the first artifact write")
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", dying_parquet)
+        with pytest.raises(RuntimeError, match="first artifact"):
+            S.build_ivfpq_index(emb, tmp, nlist=8, m=4, ksub=16, pq_iters=1)
+        monkeypatch.undo()
+
+        assert not os.path.exists(os.path.join(tmp, "header"))
+        fresh = [
+            [float(x) for x in r["centroid"]]
+            for r in spark.read.parquet(os.path.join(tmp, "centroids"))
+            .orderBy("cid")
+            .collect()
+        ]
+        centroids, _, _ = S._load_ivfpq_constants(spark, tmp)
+        assert len(centroids) == 8
+        assert centroids == fresh
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

@@ -7,6 +7,7 @@ delta/safe-delta scenarios the reference leaves untested.
 
 from __future__ import annotations
 
+import itertools
 import json
 
 import pytest
@@ -37,6 +38,56 @@ def make_sync(spark, tmp_path, api: FakeSriApi, layout=LAYOUT_LARGE, **kw) -> Sr
         watermarks=wm,
         **kw,
     )
+
+
+DERBY_COLUMNS = [
+    ("href", "VARCHAR(200)"), ("key", "VARCHAR(64)"), ("modified", "TIMESTAMP"),
+    ("jsondata", "VARCHAR(4000)"), ("resourcetype", "VARCHAR(32)"),
+    ("path", "VARCHAR(200)"), ("baseurl", "VARCHAR(200)"),
+]
+_derby_dbs = itertools.count()
+
+
+def make_jdbc_sync(spark, tmp_path, api: FakeSriApi, **kw):
+    """The same endpoint as ``make_sync``, targeting a fresh embedded Derby
+    table (quoted lowercase columns; VARCHAR staging, which Derby can
+    compare, instead of the default CLOB)."""
+    from sri2db_spark.sinks.jdbc import JdbcResourceSink  # noqa: PLC0415
+    from sri2db_spark.sync.jdbc_engine import Sri2DbJdbcSync  # noqa: PLC0415
+
+    sink = JdbcResourceSink(
+        spark=spark, url=f"jdbc:derby:memory:se{next(_derby_dbs)};create=true",
+        target_table="resources", layout=LAYOUT_LARGE, properties={},
+        dialect="ansi",
+    )
+    conn = sink._connection()
+    try:
+        cols = ", ".join(f'"{c}" {t}' for c, t in DERBY_COLUMNS)
+        conn.createStatement().executeUpdate(f"CREATE TABLE resources ({cols})")
+    finally:
+        conn.close()
+    return Sri2DbJdbcSync(
+        reader=SriApiReader(spark, BASEURL, fetch_json=api.fetch_json, limit=3),
+        sink=sink,
+        path=api.path,
+        baseurl=BASEURL,
+        layout=LAYOUT_LARGE,
+        watermarks=WatermarkStore(spark, str(tmp_path / "synctimes")),
+        staging_column_types=", ".join(f"{c} {t}" for c, t in DERBY_COLUMNS),
+        **kw,
+    )
+
+
+MAKE_SYNC = {"lake": make_sync, "jdbc": make_jdbc_sync}
+
+
+def synced_rows(spark, sync) -> list[tuple[str, str]]:
+    """(href, jsondata) of every target row, sorted — lake or JDBC."""
+    if isinstance(sync, Sri2DbSync):
+        df = sync.table.read()
+    else:
+        df = spark.read.jdbc(sync.sink.url, sync.sink.target_table, properties={})
+    return sorted((r["href"], r["jsondata"]) for r in df.collect())
 
 
 def test_full_sync_reference_golden(spark, tmp_path):
@@ -509,27 +560,25 @@ def test_compact_partition_missing_is_noop(spark, tmp_path):
     assert table.compact_partition("https://x", "/nope") == (0, 0)
 
 
-def test_full_sync_offset_sharded_matches_sequential(spark, tmp_path):
+@pytest.mark.parametrize("target", ["lake", "jdbc"])
+def test_full_sync_offset_sharded_matches_sequential(spark, tmp_path, target):
     """The A2 offset-sharded full sync (executor-side disjoint ranges) must
     produce byte-identical table contents to sequential next-link paging,
     and must actually fan out offset requests instead of walking next
-    links."""
+    links — into the lake and into a live database alike (the feed read is
+    the shared lifecycle's)."""
+    make = MAKE_SYNC[target]
     api_seq = FakeSriApi(n=50, page_size=7)
-    seq = make_sync(spark, tmp_path / "seq", api_seq)
+    seq = make(spark, tmp_path / "seq", api_seq)
     seq.full_sync()
-    want = sorted(
-        (r["href"], r["jsondata"]) for r in seq.table.read().collect()
-    )
+    want = synced_rows(spark, seq)
+    assert len(want) == 50
 
     api_sh = FakeSriApi(n=50, page_size=7)
-    sharded = make_sync(
-        spark, tmp_path / "sh", api_sh, full_sync_shard_size=10
-    )
+    sharded = make(spark, tmp_path / "sh", api_sh, full_sync_shard_size=10)
     res = sharded.full_sync()
     assert res.resources_synced == 50
-    got = sorted(
-        (r["href"], r["jsondata"]) for r in sharded.table.read().collect()
-    )
+    got = synced_rows(spark, sharded)
     assert got == want
     # fetches ran executor-side: the driver-process request log saw ONLY the
     # count probe (the sharded page reads hit the pickled copy inside the
@@ -607,3 +656,57 @@ def test_delta_sync_sharded_matches_sequential(spark, tmp_path, capsys):
     assert [o for o in fp_sh if o not in scanish] == [
         o for o in fp_seq if o not in scanish
     ]
+
+
+def _ms(iso: str) -> int:
+    import datetime as dt  # noqa: PLC0415
+
+    return int(dt.datetime.fromisoformat(iso.replace("Z", "+00:00")).timestamp() * 1000)
+
+
+@pytest.mark.parametrize("target", ["lake", "jdbc"])
+def test_empty_collection_syncs(spark, tmp_path, target):
+    """An empty collection through full, delta and safe-delta: every count
+    is 0, the target stays empty, and no watermark is written (a sync that
+    saw no records keeps the previous mark, here none). These runs take
+    the observation fallbacks: the optimizer can prune the empty feed."""
+    api = FakeSriApi(n=0)
+    sync = MAKE_SYNC[target](spark, tmp_path, api)
+    for run, synctype in (
+        (sync.full_sync, "FULL"),
+        (sync.delta_sync, "DELTA"),
+        (sync.safe_delta_sync, "SAFEDELTA"),
+    ):
+        res = run()
+        assert res.synctype == synctype
+        assert (res.resources_synced, res.deletes_synced, res.rows_after) == (0, 0, 0)
+        assert res.watermark_ms is None
+        assert synced_rows(spark, sync) == []
+        assert sync.watermarks.get("resources", BASEURL, api.path, synctype) == (None, None)
+
+
+@pytest.mark.parametrize("target", ["lake", "jdbc"])
+def test_no_change_delta_syncs(spark, tmp_path, target):
+    """A full sync of 5 rows, then delta and safe-delta syncs whose
+    watermark is at the newest ``modified``: nothing is fetched, deleted or
+    gap-filled, the target keeps its 5 rows, and the watermark stays put."""
+    from .fake_api import seq_ts
+
+    api = FakeSriApi(n=5)
+    sync = MAKE_SYNC[target](spark, tmp_path, api)
+    res = sync.full_sync()
+    assert (res.resources_synced, res.deletes_synced, res.rows_after) == (5, 0, 5)
+    want = synced_rows(spark, sync)
+    assert [h for h, _ in want] == [f"/a/{i}" for i in range(1, 6)]
+    newest = _ms(seq_ts(60 * 5))
+    full_wm, _ = sync.watermarks.get("resources", BASEURL, api.path, "FULL")
+    assert full_wm is not None and full_wm <= newest
+
+    for run, synctype in ((sync.delta_sync, "DELTA"), (sync.safe_delta_sync, "SAFEDELTA")):
+        sync.watermarks.put("resources", BASEURL, api.path, synctype, newest, newest)
+        res = run()
+        assert res.synctype == synctype
+        assert (res.resources_synced, res.deletes_synced, res.rows_after) == (0, 0, 5)
+        assert res.watermark_ms == newest
+        assert synced_rows(spark, sync) == want
+        assert sync.watermarks.get("resources", BASEURL, api.path, synctype)[0] == newest
