@@ -185,6 +185,18 @@ class LocalFS:
         with open(path) as f:
             return f.read()
 
+    def read_bytes(self, path: str) -> bytes:
+        """Binary contents of a small data file (a control-table parquet
+        file the driver reads itself); FileNotFoundError when absent."""
+        with open(path, "rb") as f:
+            return f.read()
+
+    def write_bytes(self, path: str, data: bytes) -> None:
+        """Write a small data file into a STAGED directory. Not a commit
+        point (the committer publishes the directory), so no tmp+replace."""
+        with open(path, "wb") as f:
+            f.write(data)
+
     def remove(self, path: str) -> None:
         os.remove(path)
 
@@ -333,6 +345,14 @@ class FsspecFS:
     def read(self, path: str) -> str:
         with self._fs.open(path, "r") as f:
             return f.read()
+
+    def read_bytes(self, path: str) -> bytes:
+        with self._fs.open(path, "rb") as f:
+            return f.read()
+
+    def write_bytes(self, path: str, data: bytes) -> None:
+        with self._fs.open(path, "wb") as f:
+            f.write(data)
 
     def remove(self, path: str) -> None:
         self._fs.rm_file(path)

@@ -520,19 +520,34 @@ class JdbcResourceSink:
         finally:
             conn.close()
 
-    def merge(self, statements: list[str], dry_run: bool = False) -> None:
+    def merge(
+        self,
+        statements: list[str],
+        dry_run: bool = False,
+        count_query: str | None = None,
+    ) -> int | None:
         """Run the generated statements in ONE transaction (D6); dry-run
-        rolls back instead of committing (client.js:1808-1813)."""
+        rolls back instead of committing (client.js:1808-1813).
+        ``count_query`` (a single-value ``SELECT COUNT(*)``) runs inside
+        that transaction after the statements, before the commit or
+        rollback, so a dry run reports the count the merge would leave;
+        its value is returned (None without one)."""
         conn = self._connection()
         try:
             conn.setAutoCommit(False)
             st = conn.createStatement()
             for sql in statements:
                 st.executeUpdate(sql)
+            count = None
+            if count_query is not None:
+                rs = st.executeQuery(count_query)
+                rs.next()
+                count = int(rs.getLong(1))
             if dry_run:
                 conn.rollback()
             else:
                 conn.commit()
+            return count
         except Exception:
             conn.rollback()
             raise

@@ -3,7 +3,8 @@
 An SRI collection is paginated via ``$$meta.next`` links — inherently a
 sequential scan — so the reader runs on the driver with a 1-deep prefetch
 thread (the reference's pipelining, ``src/lib/client.js:1506``) and
-materializes pages into Arrow-backed DataFrames in fixed-size batches.
+materializes pages into Arrow-backed DataFrames in fixed-size batches
+(``_page_batch_df``: a JVM local scan behind a coalesce barrier).
 
 Pushdown is part of the source, exactly as in the reference:
 - predicate pushdown: ``modifiedSince`` (client.js:1684-1687), tombstone scan
@@ -234,9 +235,9 @@ class SriApiReader:
 
         Pushdown goes into the URL: ``limit`` (page size), ``modifiedSince``
         (A4), ``$$meta.deleted=true`` + stripped filters (A5), ``expand`` (A6).
-        Pages accumulate into createDataFrame batches of ``rows_per_batch`` to
-        bound driver memory, then union (Catalyst folds the unions into one
-        scan of localtable batches).
+        Pages accumulate into Arrow-backed batches of ``rows_per_batch``
+        (``_page_batch_df``) to bound the driver's Python row buffer, then
+        union.
         """
         p = strip_query(path) if deleted else path
         sep = "&" if "?" in p else "?"
@@ -262,28 +263,21 @@ class SriApiReader:
         return df
 
     def _page_batch_df(self, buf: list[tuple[str | None, str | None]]) -> DataFrame:
-        """One driver-accumulated page batch → DataFrame.
+        """One driver-accumulated page batch → DataFrame, through
+        ``localframe.scan_df``: a pyarrow table handed to ``createDataFrame``
+        (a JVM ``LocalTableScan`` no Python worker touches), then
+        ``coalesce(defaultParallelism)``, the barrier that keeps
+        ``ConvertToLocalRelation`` from folding the staging chain (the
+        ``from_json`` envelope parse and all) into one single-threaded
+        driver evaluation at plan time; the module docstring of
+        ``localframe`` has the 100k-row numbers. Staging the 5.4k-row delta
+        feed to the ``noop`` sink at 4 cores, warm: 0.18-0.21 s, against
+        0.40-0.55 s for the former pickled-list RDD (which Python workers
+        decode in every job that reads it) and 0.75-0.88 s for a
+        ``pyspark.sql.datasource`` reader with no HTTP in it."""
+        from ..localframe import scan_df  # noqa: PLC0415
 
-        Deliberately the PICKLED-LIST construction, not ``localframe``'s
-        Arrow ``LocalRelation``: a LocalRelation invites the optimizer's
-        ``ConvertToLocalRelation`` rule to evaluate every downstream
-        deterministic projection EAGERLY ON THE DRIVER at plan time — for a
-        100k-row page batch that folds the whole staging chain (from_json
-        envelope parse and all) into a single-threaded driver pass, re-run
-        on every action that embeds the feed (measured: +4-5 s per
-        200k-row delta merge, the dominant regression of the r12 delta
-        bench). The pickled-RDD scan keeps staging distributed; measured
-        end-to-end (construct + stage + noop, 200k rows, local[32]):
-        list 2.0-2.7 s vs plain Arrow LocalRelation 4.7-5.2 s vs
-        Arrow + repartition barrier 2.7-3.4 s. ``localframe.local_df``
-        remains the right construction for the engine's tiny CONTROL
-        frames (watermark rows, id lists), where no corpus-sized
-        expression can fold into the driver."""
-        if not buf:
-            from ..localframe import empty_df  # noqa: PLC0415
-
-            return empty_df(self.spark, PAGE_SCHEMA)
-        return self.spark.createDataFrame(buf, PAGE_SCHEMA)
+        return scan_df(self.spark, buf, PAGE_SCHEMA)
 
     # -- point lookups -------------------------------------------------------
 

@@ -9,7 +9,8 @@ is only the target adapter:
 - ``_apply``: ``df.write.jdbc`` bulk-inserts the C1-deduped batch (and the
   tombstone / membership keys) into per-run staging tables (A8 batching),
   then the driver executes the generated merge statements (C2-C9 as SQL)
-  inside ONE transaction (D6); dry-run rolls back (client.js:1808-1813);
+  inside ONE transaction (D6) and counts the scope's rows in it; dry-run
+  rolls back (client.js:1808-1813);
 - ``_target_keys``: a pruned JDBC read of the target's key columns, the
   only time target data enters Spark (safe-delta gap detection).
 
@@ -74,18 +75,6 @@ class Sri2DbJdbcSync(SyncLifecycle):
             for c, v in self._scope().items()
         ) or "1=1"
 
-    def _count_scope(self) -> int:
-        conn = self.sink._connection()  # noqa: SLF001
-        try:
-            rs = conn.createStatement().executeQuery(
-                f"SELECT COUNT(*) FROM {self.sink.target_table} "
-                f"WHERE {self._scope_predicate()}"
-            )
-            rs.next()
-            return int(rs.getLong(1))
-        finally:
-            conn.close()
-
     def _target_keys(self) -> DataFrame:
         """Pruned JDBC read of the target's key columns within this sync's
         scope (the scope predicate and the projection both push into the
@@ -144,8 +133,16 @@ class Sri2DbJdbcSync(SyncLifecycle):
                     self.sink.target_table, run, deletes_table,
                     self.layout, self.sink.dialect,
                 )
-            self.sink.merge(stmts, dry_run=self.dry_run)
-            return self._count_scope()
+            # counted inside the merge transaction, so a dry run reports
+            # the count the sync would leave, as the lake target does
+            return self.sink.merge(
+                stmts,
+                dry_run=self.dry_run,
+                count_query=(
+                    f"SELECT COUNT(*) FROM {self.sink.target_table} "
+                    f"WHERE {self._scope_predicate()}"
+                ),
+            )
         finally:
             if written:
                 self.sink.drop_tables(written)

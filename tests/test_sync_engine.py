@@ -650,9 +650,12 @@ def test_delta_sync_sharded_matches_sequential(spark, tmp_path, capsys):
     )
     assert res_sh.rows_after == n - tomb
     # merge plan operator shape identical up to the feed's scan nodes
-    # (pickled-list ExistingRDD scan vs offset-seed LocalTableScan +
-    # mapInPandas shard scan)
-    scanish = {"Scan", "MapInPandas", "ArrowEvalPython", "Exchange", "LocalTableScan"}
+    # (Arrow LocalTableScan behind its Coalesce barrier vs offset-seed
+    # LocalTableScan + mapInPandas shard scan)
+    scanish = {
+        "Scan", "MapInPandas", "ArrowEvalPython", "Exchange", "LocalTableScan",
+        "Coalesce",
+    }
     assert [o for o in fp_sh if o not in scanish] == [
         o for o in fp_seq if o not in scanish
     ]
@@ -683,6 +686,27 @@ def test_empty_collection_syncs(spark, tmp_path, target):
         assert res.watermark_ms is None
         assert synced_rows(spark, sync) == []
         assert sync.watermarks.get("resources", BASEURL, api.path, synctype) == (None, None)
+
+
+@pytest.mark.parametrize("target", ["lake", "jdbc"])
+def test_dry_run_reports_the_count_it_would_leave(spark, tmp_path, target):
+    """A dry-run full sync after the feed gained a row reports the row
+    count the sync would leave (11) on both targets — the JDBC count runs
+    inside the merge transaction, before its rollback — and leaves the
+    target and the watermark unchanged."""
+    from .fake_api import seq_ts
+
+    api = FakeSriApi(n=10)
+    sync = MAKE_SYNC[target](spark, tmp_path, api)
+    assert sync.full_sync().rows_after == 10
+    want = synced_rows(spark, sync)
+    wm = sync.watermarks.get("resources", BASEURL, api.path, "FULL")
+    api.add(11, modified=seq_ts(60 * 11))
+    sync.dry_run = True
+    res = sync.full_sync()
+    assert res.dry_run and (res.resources_synced, res.rows_after) == (11, 11)
+    assert synced_rows(spark, sync) == want
+    assert sync.watermarks.get("resources", BASEURL, api.path, "FULL") == wm
 
 
 @pytest.mark.parametrize("target", ["lake", "jdbc"])
