@@ -156,47 +156,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _perm_params(num_perm: int) -> list[tuple[int, int]]:
-    """Deterministic permutation parameters from a fixed LCG (no RNG at plan
-    build time keeps signatures reproducible across runs/engines)."""
-    params = []
-    state = 0x5DEECE66D
-    for _ in range(num_perm):
-        state = (state * 6364136223846793005 + 1442695040888963407) % (2**63)
-        a = state % (MERSENNE31 - 1) + 1
-        state = (state * 6364136223846793005 + 1442695040888963407) % (2**63)
-        b = state % MERSENNE31
-        params.append((a, b))
-    return params
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, num_perm: int = 128
-) -> DataFrame:
-    """Per-doc MinHash signature: for permutation i, min over shingles of
-    (aᵢ·h + bᵢ) mod 2³¹−1 where h = xxhash64(shingle) mod 2³¹−1.
-
-    Plan shape matters at scale: each shingle is hashed ONCE (explode →
-    xxhash64), then the ``num_perm`` permutation-mins run as one map-side-
-    combined aggregation — a single shuffle keyed by doc, with per-partition
-    partial mins. (The tempting alternative — num_perm nested array
-    ``transform``s — duplicates the hash expression per permutation, blows
-    codegen, and is ~100× slower.)
-    """
-    params = _perm_params(num_perm)
-    ds = _all_shingles(df, id_col, text_col, k)
-    h = F.pmod(F.xxhash64("s"), F.lit(MERSENNE31))
-    mins = ds.select("id", h.alias("h")).groupBy("id").agg(
-        *[
-            F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(MERSENNE31))).alias(f"m{i}")
-            for i, (a, b) in enumerate(params)
-        ]
-    )
-    return mins.select(
-        "id", F.array(*[F.col(f"m{i}") for i in range(num_perm)]).alias("sig")
-    )
-
-
 def oph_signatures(
     df: DataFrame, id_col: str, text_col: str, k: int = 3, num_perm: int = 128
 ) -> DataFrame:
@@ -270,7 +229,6 @@ def minhash_lsh_pairs(
     bands: int = 64,
     threshold: float = 0.5,
     max_bucket_size: int | None = 1000,
-    method: str = "oph",
     prefilter_sigma: float | None = 5.0,
 ) -> DataFrame:
     """Scalable near-dup pairs: MinHash → LSH banding → candidate bucket join
@@ -284,11 +242,8 @@ def minhash_lsh_pairs(
     _drop_oversized_buckets) — the quadratic-blowup guard for
     boilerplate-heavy corpora.
 
-    ``method``: "oph" (default) computes signatures with one-permutation
-    hashing — ~10× cheaper per shingle; "perm" uses the classic 128
-    independent permutation hashes. Either way every candidate is verified
-    with exact Jaccard, so the OUTPUT is identical as long as banding recall
-    holds (both configurations keep the miss probability negligible).
+    Signatures are one-permutation-hashing MinHash (``oph_signatures``),
+    and every candidate is verified with exact Jaccard.
 
     ``prefilter_sigma``: r=2 banding buys its ~exact recall with low
     precision — on a near-dup-rich corpus candidates outnumber true pairs
@@ -308,8 +263,7 @@ def minhash_lsh_pairs(
     # Catalyst does not reuse the exchange across self-join sides here; without
     # this the (expensive) signature aggregation runs twice. Spark's context
     # cleaner reclaims the block once the result DataFrame is unreachable.
-    sig_fn = oph_signatures if method == "oph" else minhash_signatures
-    sigs = sig_fn(df, id_col, text_col, k, num_perm).persist()
+    sigs = oph_signatures(df, id_col, text_col, k, num_perm).persist()
     # Persist the band frame too: the oversized-bucket guard aggregates it
     # once and the self-join reads it twice more — without the cache the
     # 64x band explode re-runs for each consumer (measured ~0.8 s per
@@ -753,7 +707,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int = 50,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Near-dup CLUSTERS from a pair list: (id, component) where component =
     the minimum id reachable through the pair graph.
@@ -761,71 +714,24 @@ def connected_components(
     Deduplication needs groups, not pairs — "keep one representative per
     cluster" requires the transitive closure of the pairwise matches.
 
-    ``algorithm``:
-
-    - ``"minlabel"`` — iterative min-label propagation; converges in
-      O(cluster diameter) rounds. Each round is one shuffle join + one
-      aggregation; the fixpoint is unique, so the result is deterministic
-      regardless of execution order.
-    - ``"star"`` — alternating large-star/small-star (Kiveris et al.
-      2014): O(log² n) rounds independent of diameter, the right regime
-      when one giant component (web-scale boilerplate) would drive
-      min-label through many more-expensive rounds.
-    - ``"auto"`` (default) — star: its round count is bounded without
-      knowing the component structure up front, and on the shallow
-      graphs where min-label shines both finish in 2-3 rounds anyway.
-
-    Both produce the identical (id, min-reachable-id) labeling — the same
-    oracle verifies either.
+    Alternating large-star/small-star rounds (Kiveris et al. 2014,
+    ``_cc_star``): O(log² n) rounds independent of component diameter, so
+    one giant component (web-scale boilerplate) cannot drive the round
+    count up the way min-label propagation's O(diameter) rounds would.
     """
-    if algorithm not in ("minlabel", "star", "auto"):
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
-    if algorithm in ("star", "auto"):
-        # materialize the pair list ONCE: upstream pair generation (LSH /
-        # Jaccard joins) is expensive, and both the edge set and the node
-        # set derive from it — without this the final nodes-join would
-        # silently re-run the whole pair pipeline
-        e0 = pairs.select(
-            F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-        ).localCheckpoint(eager=True)
-        nodes = (
-            e0.select(F.col("src").alias("id"))
-            .unionByName(e0.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        return _cc_star(
-            e0.filter(F.col("src") != F.col("dst")), nodes, max_iters
-        )
-    e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().persist()
-    # localCheckpoint (not persist) every round: persist caches data but the
-    # logical plan still accumulates — after k rounds the plan holds O(2^k)
-    # join nodes and driver-side planning explodes. Truncating lineage each
-    # round (the GraphX-style pattern for iterative algorithms) keeps the
-    # plan one scan deep regardless of iteration count.
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
+    # materialize the pair list ONCE: upstream pair generation (LSH /
+    # Jaccard joins) is expensive, and both the edge set and the node
+    # set derive from it — without this the final nodes-join would
+    # silently re-run the whole pair pipeline
+    e0 = pairs.select(
+        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).localCheckpoint(eager=True)
-    for _ in range(max_iters):
-        nbr = edges.join(labels, edges["dst"] == labels["id"]).select(
-            edges["src"].alias("id"), F.col("comp")
-        )
-        new_labels = (
-            labels.unionByName(nbr).groupBy("id").agg(F.min("comp").alias("comp"))
-        ).localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels.select("id", F.col("comp").alias("component"))
+    nodes = (
+        e0.select(F.col("src").alias("id"))
+        .unionByName(e0.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    return _cc_star(e0.filter(F.col("src") != F.col("dst")), nodes, max_iters)
 
 
 def dedup_survivors(

@@ -3,8 +3,8 @@
 The reference engine has no graph operators; these extend the 100 TB
 pipeline surface (domain authority ranking for web-corpus curation is the
 canonical use: rank source domains by link structure, then weight sampling
-by rank). The only iterative operator shipped so far was min-label
-propagation (``functions.dedup.connected_components``); PageRank is the
+by rank). The other iterative operator is connected components
+(``functions.dedup.connected_components``); PageRank is the
 other classic whose Spark shape — per-iteration shuffle join + aggregate
 with lineage truncation — a 1000-executor deployment needs.
 

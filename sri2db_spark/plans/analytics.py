@@ -988,7 +988,7 @@ def q_stratified_sample(spark, sf):
 
 def q_dedup_components(spark, sf):
     """Near-dup clusters: transitive closure of the exact-Jaccard pairs via
-    iterative min-label propagation (unique fixpoint → deterministic)."""
+    large-star/small-star rounds (min reachable id → deterministic)."""
     pairs = D.ngram_jaccard_pairs(
         _t(spark, sf, "documents"), "doc_id", "text", k=3, threshold=0.5
     )

@@ -1639,7 +1639,7 @@ ORACLES: dict[str, str] = {
         GROUP BY source, lang
     """,
     # transitive closure of the exact near-dup pairs; min reachable id per
-    # node == the unique fixpoint of Spark's min-label propagation
+    # node == Spark's connected_components labeling
     "dedup_components": f"""
         WITH RECURSIVE p AS ({_JACCARD_PAIRS}),
         edges AS (

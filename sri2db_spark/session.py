@@ -42,24 +42,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r13 (guide §2.1 + r12 verdict item 3): both AQE coalescing knobs
-        # are env-parameterized for A/B and per-deployment tuning. The
-        # DEFAULT stays Spark's (parallelismFirst=true): the measured
-        # size-governed alternative (false + 64 MB advisory) fixed the
-        # tiny-aggregate entries (bm25 0.82x, q1 0.87x) but cost the
-        # CPU-dense small-byte stages far more (dedup_minhash_lsh 1.35x,
-        # dedup_survivors 1.24x, sri_full_sync_2m_sharded 1.29x — paired
-        # same-day A/B, plans/r13/ab_aqe_c32.jsonl): shuffled BYTES are a
-        # bad proxy for per-row CPU in the LSH/CC/merge stages, so letting
-        # the advisory size govern serializes them.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY_BYTES", "67108864"),
-        )
+        # AQE coalescing: Spark's defaults; byte-sized partitions slowed LSH/CC
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -1,36 +1,38 @@
 """Paged SRI REST source (SURVEY §2.A, A1-A7).
 
-An SRI collection is paginated via ``$$meta.next`` links — inherently a
-sequential scan — so the reader runs on the driver with a 1-deep prefetch
-thread (the reference's pipelining, ``src/lib/client.js:1506``) and
-materializes pages into Arrow-backed DataFrames in fixed-size batches
-(``_page_batch_df``: a JVM local scan behind a coalesce barrier).
+Every read pages through one loop, ``feed_pages`` (A1: fetch a page, follow
+``$$meta.next``; A2: synthesize ``offset=`` pages when next links are
+broken, client.js:1498-1501). Its three callers:
 
-Pushdown is part of the source, exactly as in the reference:
+- ``SriApiReader.iter_pages`` — the driver scan, with a 1-deep prefetch
+  thread (the reference's pipelining, ``src/lib/client.js:1506``); pages
+  become Arrow-backed DataFrames in fixed-size batches (``_page_batch_df``:
+  a JVM local scan behind a coalesce barrier);
+- ``read_offset_sharded`` — the scale path for offset-addressable APIs:
+  each executor task pages one disjoint offset window (``mapInPandas``).
+  Next-link following stays the sequential-fidelity default;
+- ``get_hrefs_distributed`` — A3 keyIn batches, paged inside executor tasks.
+
+Pushdown is part of the source, exactly as in the reference, and is composed
+in one place (``feed_url``):
 - predicate pushdown: ``modifiedSince`` (client.js:1684-1687), tombstone scan
   ``$$meta.deleted=true`` (client.js:1688-1693), user filters in the path;
 - projection pushdown: ``expand=FULL|NONE`` (utils.js:74-80).
 
-Scale path: when the API supports offset addressing (the reference's
-``nextLinksBroken`` mode, client.js:1498-1501), ``read_offset_sharded``
-distributes disjoint offset ranges across executors with ``mapInPandas`` —
-that is the 1000-executor ingest strategy; next-link following stays the
-sequential-fidelity default.
-
 The HTTP transport is injectable (``fetch_json``) so tests run a deterministic
-in-process fake API; the default transport uses urllib with retry
-(reference delegates retry to sri-client, README.md:85-90).
+in-process fake API; the default transport (``make_fetch_json()``) uses urllib
+with retry (reference delegates retry to sri-client, README.md:85-90).
 """
 
 from __future__ import annotations
 
 import json
 import re
-import threading
 import time
 import urllib.parse
 import urllib.request
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -59,15 +61,6 @@ def strip_query(path: str) -> str:
     """Path without user filters — tombstone scans must see deletions globally
     (client.js:1688-1693 deliberately strips filters)."""
     return path.split("?", 1)[0]
-
-
-def default_fetch_json(
-    url: str, timeout: float = 60.0, retries: int = 3, initial_wait: float = 0.5
-) -> dict:
-    """GET url → parsed JSON with exponential-backoff retry (README.md:85-90)."""
-    return make_fetch_json(timeout=timeout, retries=retries, initial_wait=initial_wait)(
-        url
-    )
 
 
 def make_fetch_json(
@@ -141,8 +134,106 @@ def translate_page(payload) -> list[tuple[str | None, str | None]]:
     raise ValueError(f"unrecognized SRI response shape: {type(payload)}")
 
 
+
+
+Row = tuple[str | None, str | None]
+
+
+def _resolve(root: str, url: str) -> str:
+    """``url`` as fetched: absolute links stay, paths go under ``root``."""
+    return url if url.startswith("http") else root + url
+
+
+def _with_params(url: str, *params: str) -> str:
+    """``url`` with ``params`` appended to its query string."""
+    if not params:
+        return url
+    return url + ("&" if "?" in url else "?") + "&".join(params)
+
+
+def feed_url(
+    path: str,
+    limit: int | None = None,
+    modified_since: str | None = None,
+    deleted: bool = False,
+    expand: str | None = None,
+) -> str:
+    """The feed filters, composed in one place: ``limit`` (page size),
+    ``$$meta.deleted=true`` on the path stripped of its filters (A5),
+    ``modifiedSince`` (A4) and ``expand`` (A6). The sequential scan, the
+    shard probe and the shards all page a collection built here, so they
+    page the same filtered rows."""
+    params = []
+    if limit is not None:
+        params.append(f"limit={limit}")
+    if deleted:
+        params.append("$$meta.deleted=true")
+    if modified_since:
+        params.append(f"modifiedSince={urllib.parse.quote(modified_since)}")
+    url = _with_params(strip_query(path) if deleted else path, *params)
+    return url if expand is None else set_expand_on_path(url, expand)
+
+
+def feed_pages(
+    fetch: Callable[[str], dict],
+    root: str,
+    url: str,
+    limit: int,
+    offsets: bool = False,
+    window: tuple[int, int] | None = None,
+) -> Iterator[list[Row]]:
+    """The one SRI paging loop (A1, client.js:1485-1522): fetch a page,
+    yield its rows, decide the next page.
+
+    The next page is the server's ``$$meta.next``. When that is missing
+    after a full page (``limit`` rows) and ``offsets`` is set, it is
+    ``url`` at ``offset=<rows so far>`` (A2, the reference's
+    ``nextLinksBroken``, client.js:1498-1501).
+
+    ``window=(start, rows)`` reads one offset shard instead: every page is
+    ``url`` at ``limit=…&offset=…`` from ``start``, its size capped at the
+    window's end; next links are not followed, and the read stops after
+    ``rows`` rows or at a short page.
+
+    Relative URLs resolve against ``root``. The function is module-level
+    and closes over nothing, so executor tasks (offset shards, keyIn
+    batches) run it with a pickled ``fetch``.
+    """
+    got = 0
+    page_limit = limit if window is None else min(limit, window[1])
+    page_url: str | None = url
+    if window is not None:
+        page_url = _with_params(url, f"limit={page_limit}", f"offset={window[0]}")
+    while page_url is not None:
+        payload = fetch(_resolve(root, page_url))
+        rows = translate_page(payload)
+        got += len(rows)
+        yield rows
+        full = len(rows) >= page_limit
+        page_url = None
+        if window is not None:
+            start, cap = window
+            page_limit = min(limit, cap - got)
+            if full and page_limit > 0:
+                page_url = _with_params(url, f"limit={page_limit}", f"offset={start + got}")
+        else:
+            if isinstance(payload, dict):
+                page_url = (payload.get("$$meta") or {}).get("next")
+            if page_url is None and offsets and full:
+                base = re.sub(r"[&?]offset=\d+", "", url)
+                page_url = _with_params(base, f"offset={got}")
+
+
+def _frames(pages: Iterator[list[Row]]):
+    """Executor side: one pandas frame per page, for ``mapInPandas``."""
+    import pandas as pd  # noqa: PLC0415
+
+    for rows in pages:
+        yield pd.DataFrame(rows, columns=PAGE_SCHEMA.names)
+
+
 class SriApiReader:
-    """Driver-paged reader for one SRI endpoint."""
+    """Reader for one SRI endpoint: every read pages through ``feed_pages``."""
 
     def __init__(
         self,
@@ -154,74 +245,36 @@ class SriApiReader:
     ) -> None:
         self.spark = spark
         self.base_url = base_url.rstrip("/")
-        self.fetch_json = fetch_json or default_fetch_json
+        self.fetch_json = fetch_json or make_fetch_json()
         self.limit = limit
         self.next_links_broken = next_links_broken
 
     # -- paging ------------------------------------------------------------
-
-    def _full_url(self, path_or_url: str) -> str:
-        if path_or_url.startswith("http"):
-            return path_or_url
-        return self.base_url + path_or_url
 
     def probe_count(self, path: str) -> int | None:
         """Cheap collection-size probe: fetch one row and read
         ``$$meta.count`` (SRI servers report the filtered total unless count
         is disabled). Returns None when the server doesn't expose it — the
         caller must fall back to sequential next-link paging."""
-        sep = "&" if "?" in path else "?"
-        payload = self.fetch_json(self._full_url(f"{path}{sep}limit=1"))
+        payload = self.fetch_json(_resolve(self.base_url, _with_params(path, "limit=1")))
         if isinstance(payload, dict):
             c = (payload.get("$$meta") or {}).get("count")
             if isinstance(c, int):
                 return c
         return None
 
-    def iter_pages(self, path: str) -> Iterator[list[tuple[str | None, str | None]]]:
-        """A1/A2 — follow $$meta.next with a 1-deep prefetch thread
-        (client.js:1485-1522; prefetch at :1506; broken-links fallback
-        :1498-1501)."""
-        url: str | None = self._full_url(path)
-        offset = 0
-
-        def fetch(u: str) -> dict:
-            return self.fetch_json(u)
-
-        pending: threading.Thread | None = None
-        box: dict = {}
-
-        def start_prefetch(u: str) -> threading.Thread:
-            def run() -> None:
-                try:
-                    box["payload"] = fetch(u)
-                except Exception as e:  # surfaced on join
-                    box["error"] = e
-
-            t = threading.Thread(target=run, daemon=True)
-            t.start()
-            return t
-
-        pending = start_prefetch(url)
-        while url is not None:
-            pending.join()
-            if "error" in box:
-                raise box.pop("error")
-            payload = box.pop("payload")
-            rows = translate_page(payload)
-            offset += len(rows)
-            nxt = None
-            if isinstance(payload, dict):
-                nxt = (payload.get("$$meta") or {}).get("next")
-            if nxt is None and self.next_links_broken and len(rows) >= self.limit:
-                # A2: synthesize next page by offset when links are unreliable
-                base = re.sub(r"[&?]offset=\d+", "", self._full_url(path))
-                sep = "&" if "?" in base else "?"
-                nxt = f"{base}{sep}offset={offset}"
-            url = self._full_url(nxt) if nxt else None
-            if url is not None:
-                pending = start_prefetch(url)
-            yield rows
+    def iter_pages(self, url: str) -> Iterator[list[Row]]:
+        """A1/A2 on the driver: ``feed_pages`` with a 1-deep prefetch
+        thread (client.js:1506) that fetches the next page while the
+        caller handles the current one."""
+        pages = feed_pages(
+            self.fetch_json, self.base_url, url, self.limit, self.next_links_broken
+        )
+        with ThreadPoolExecutor(max_workers=1) as prefetch:
+            pending = prefetch.submit(next, pages, None)
+            while (page := pending.result()) is not None:
+                pending = prefetch.submit(next, pages, None)
+                yield page
 
     def read_collection(
         self,
@@ -233,23 +286,15 @@ class SriApiReader:
     ) -> DataFrame:
         """Scan a collection into a DataFrame of (href, resource).
 
-        Pushdown goes into the URL: ``limit`` (page size), ``modifiedSince``
-        (A4), ``$$meta.deleted=true`` + stripped filters (A5), ``expand`` (A6).
-        Pages accumulate into Arrow-backed batches of ``rows_per_batch``
-        (``_page_batch_df``) to bound the driver's Python row buffer, then
-        union.
+        Pushdown goes into the URL (``feed_url``). Pages accumulate into
+        Arrow-backed batches of ``rows_per_batch`` (``_page_batch_df``) to
+        bound the driver's Python row buffer, then union.
         """
-        p = strip_query(path) if deleted else path
-        sep = "&" if "?" in p else "?"
-        url = f"{p}{sep}limit={self.limit}"
-        if deleted:
-            url += "&$$meta.deleted=true"
-        if modified_since:
-            url += f"&modifiedSince={urllib.parse.quote(modified_since)}"
-        url = set_expand_on_path(url, expand)
-
+        url = feed_url(
+            path, self.limit, modified_since=modified_since, deleted=deleted, expand=expand
+        )
         batches: list[DataFrame] = []
-        buf: list[tuple[str | None, str | None]] = []
+        buf: list[Row] = []
         for page in self.iter_pages(url):
             buf.extend(page)
             if len(buf) >= rows_per_batch:
@@ -262,7 +307,7 @@ class SriApiReader:
             df = df.unionByName(b)
         return df
 
-    def _page_batch_df(self, buf: list[tuple[str | None, str | None]]) -> DataFrame:
+    def _page_batch_df(self, buf: list[Row]) -> DataFrame:
         """One driver-accumulated page batch → DataFrame, through
         ``localframe.scan_df``: a pyarrow table handed to ``createDataFrame``
         (a JVM ``LocalTableScan`` no Python worker touches), then
@@ -281,68 +326,29 @@ class SriApiReader:
 
     # -- point lookups -------------------------------------------------------
 
-    def get_all_hrefs(self, path: str, hrefs: list[str]) -> DataFrame:
-        """A3 — batched keyIn point lookups (client.js:1524-1577): batches of
-        ≤500 keys and ≤2048 URL chars, with the same 1-page prefetch."""
-        base = strip_query(path)
-        keys = [h.rsplit("/", 1)[-1] for h in hrefs]
-        batches: list[list[str]] = []
-        cur: list[str] = []
-        cur_len = len(self._full_url(base)) + len("?keyIn=")
-        for k in keys:
-            if cur and (len(cur) >= KEYIN_MAX_KEYS or cur_len + len(k) + 1 > KEYIN_MAX_URL):
-                batches.append(cur)
-                cur, cur_len = [], len(self._full_url(base)) + len("?keyIn=")
-            cur.append(k)
-            cur_len += len(k) + 1
-        if cur:
-            batches.append(cur)
-
-        rows: list[tuple[str | None, str | None]] = []
-        for batch in batches:
-            url = f"{base}?keyIn={','.join(batch)}&limit={max(self.limit, len(batch))}"
-            url = set_expand_on_path(url, "FULL")
-            for page in self.iter_pages(url):
-                rows.extend(page)
-        # same construction as read_collection's batches: a keyIn gap fetch
-        # can return an unbounded page list, and the LocalRelation fold
-        # hazard (see _page_batch_df) applies to its staging too
-        return self._page_batch_df(rows)
-
     def get_hrefs_distributed(self, path: str, hrefs_df: DataFrame) -> DataFrame:
-        """A3 at scale — executor-side keyIn fetch of an unbounded gap list.
+        """A3 — executor-side keyIn fetch of an unbounded href list
+        (client.js:1524-1577).
 
-        The driver-side ``get_all_hrefs`` materializes the full href list on
-        the driver; after an outage on a very large collection the safe-delta
-        gap list is unbounded, so this variant keeps it distributed: each
-        executor task batches its own partition of hrefs into keyIn groups
-        (same ≤500-key / ≤2048-char limits, client.js:1524-1577) and fetches
-        them with Arrow batching. Nothing but per-batch pages ever
-        materializes in one process.
+        After an outage on a very large collection the safe-delta gap list
+        is unbounded, so it stays distributed: each executor task batches
+        its own partition of hrefs into keyIn groups of ≤500 keys and ≤2048
+        URL chars, and pages each group through ``feed_pages`` (A2 offsets
+        included). Nothing but per-page rows ever materializes in one
+        process.
         """
-        import pandas as pd  # noqa: PLC0415
-
-        fetch = self.fetch_json
-        base_root = self.base_url
+        fetch, root, limit = self.fetch_json, self.base_url, self.limit
+        offsets = self.next_links_broken
         base = strip_query(path)
-        base_len = len(self._full_url(base)) + len("?keyIn=")
-        limit = self.limit
+        base_len = len(_resolve(root, base)) + len("?keyIn=")
+
+        def batch(keys: list[str]):
+            url = feed_url(
+                f"{base}?keyIn={','.join(keys)}", max(limit, len(keys)), expand="FULL"
+            )
+            return _frames(feed_pages(fetch, root, url, limit, offsets))
 
         def run(iterator):
-            def flush(keys: list[str]):
-                url = base_root + base + f"?keyIn={','.join(keys)}&limit={max(limit, len(keys))}"
-                url = set_expand_on_path(url, "FULL")
-                rows: list[tuple[str | None, str | None]] = []
-                u: str | None = url
-                while u is not None:
-                    payload = fetch(u)
-                    rows.extend(translate_page(payload))
-                    nxt = None
-                    if isinstance(payload, dict):
-                        nxt = (payload.get("$$meta") or {}).get("next")
-                    u = None if nxt is None else (nxt if nxt.startswith("http") else base_root + nxt)
-                return pd.DataFrame(rows, columns=["href", "resource"])
-
             cur: list[str] = []
             cur_len = base_len
             for pdf in iterator:
@@ -351,12 +357,12 @@ class SriApiReader:
                     if cur and (
                         len(cur) >= KEYIN_MAX_KEYS or cur_len + len(k) + 1 > KEYIN_MAX_URL
                     ):
-                        yield flush(cur)
+                        yield from batch(cur)
                         cur, cur_len = [], base_len
                     cur.append(k)
                     cur_len += len(k) + 1
             if cur:
-                yield flush(cur)
+                yield from batch(cur)
 
         return hrefs_df.mapInPandas(run, PAGE_SCHEMA)
 
@@ -372,18 +378,16 @@ class SriApiReader:
         """Distributed offset-range scan for offset-addressable APIs.
 
         Each executor task owns a disjoint [offset, offset+shard_size) range
-        and pages through it independently — the 100 TB ingest path. Uses
-        mapInPandas so fetching happens executor-side with Arrow batching;
-        the fetch callable must be picklable (the default urllib one is).
+        and pages through it with ``feed_pages(window=…)`` — the 100 TB
+        ingest path. Uses mapInPandas so fetching happens executor-side
+        with Arrow batching; the fetch callable must be picklable (the
+        default urllib one is).
         """
-        import pandas as pd  # noqa: PLC0415
-
-        fetch = self.fetch_json
-        base = set_expand_on_path(self._full_url(path), expand)
-        limit = self.limit
-        offsets = list(range(0, total_count, shard_size))
         from ..localframe import local_df  # noqa: PLC0415
 
+        fetch, root, limit = self.fetch_json, self.base_url, self.limit
+        url = feed_url(path, expand=expand)
+        offsets = list(range(0, total_count, shard_size))
         sdf = local_df(
             self.spark,
             [(o,) for o in offsets],
@@ -393,17 +397,8 @@ class SriApiReader:
         def run(iterator):
             for pdf in iterator:
                 for off in pdf["offset"]:
-                    got = 0
-                    while got < shard_size:
-                        page_limit = min(limit, shard_size - got)
-                        sep = "&" if "?" in base else "?"
-                        url = f"{base}{sep}limit={page_limit}&offset={int(off) + got}"
-                        rows = translate_page(fetch(url))
-                        if not rows:
-                            break
-                        got += len(rows)
-                        yield pd.DataFrame(rows, columns=["href", "resource"])
-                        if len(rows) < page_limit:
-                            break
+                    yield from _frames(
+                        feed_pages(fetch, root, url, limit, window=(int(off), shard_size))
+                    )
 
         return sdf.mapInPandas(run, PAGE_SCHEMA)

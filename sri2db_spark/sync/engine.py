@@ -25,7 +25,6 @@ from __future__ import annotations
 import datetime as dt
 import threading
 import time
-import urllib.parse
 from dataclasses import KW_ONLY, dataclass, field
 from typing import ClassVar
 
@@ -49,7 +48,7 @@ from ..operators.watermark import (
     max_modified_millis,
 )
 from ..sinks.lake import LakeTable
-from ..sources.sri_api import SriApiReader
+from ..sources.sri_api import SriApiReader, feed_url
 
 
 def _now_ms() -> int:
@@ -199,21 +198,18 @@ class SyncLifecycle:
 
         With this sync type's shard size set and a server that reports
         ``$$meta.count``, the feed is read as executor-side offset shards
-        (A2); otherwise by driver-sequential next-link paging. For a delta
-        the predicate lives in the path, so probe and shards page the
-        identical filtered collection the sequential scan would."""
+        (A2); otherwise by driver-sequential next-link paging. Probe,
+        shards and the sequential scan all take their filters from
+        ``feed_url``, so they page the same filtered collection."""
         shard = (
             self.delta_sync_shard_size if modified_since else self.full_sync_shard_size
         )
         if shard:
-            path = self.path
-            if modified_since:
-                sep = "&" if "?" in path else "?"
-                path = f"{path}{sep}modifiedSince={urllib.parse.quote(modified_since)}"
-            total = self.reader.probe_count(path)
+            query = feed_url(self.path, modified_since=modified_since)
+            total = self.reader.probe_count(query)
             if total:
                 return self.reader.read_offset_sharded(
-                    path, total_count=total, shard_size=shard
+                    query, total_count=total, shard_size=shard
                 )
         return self.reader.read_collection(
             self.path, modified_since=modified_since, expand="FULL"
@@ -286,19 +282,23 @@ class SyncLifecycle:
 
         # Safe-delta membership reconciliation (A7/C7/C8/C9/A3,
         # client.js:1776-1805): members absent from both the target and the
-        # feed are gaps (C8). The gap list is unbounded after an outage, so
-        # it never materializes on the driver: executor-side keyIn fetch
-        # (A3) over the missing hrefs, persisted because both the watermark
-        # stats and the apply consume it.
+        # feed are gaps (C8). The staged feed is materialized first: gap
+        # detection and the apply both read it, and a sharded feed would
+        # otherwise be fetched from the API once per job. The gap list is
+        # unbounded after an outage, so it never materializes on the
+        # driver: executor-side keyIn fetch (A3) over the missing hrefs,
+        # persisted because both the watermark stats and the apply consume
+        # it.
         membership = gaps = gap_max = None
         n_missing = 0
         if safe:
+            staged = staged.localCheckpoint(eager=True)
+            stats = staged_stats()  # filled by the checkpoint job
             membership_raw = self.reader.read_collection(self.path, expand="NONE")
             membership = self._stage(membership_raw, ingest).select(*keys).persist()
             known = self._target_keys().unionByName(staged.select(*keys))
             missing = anti_join_missing(membership, known, keys)
             n_missing = missing.count()
-            stats = staged_stats()  # filled by the count above
             if n_missing:
                 fetched = self.reader.get_hrefs_distributed(
                     self.path, missing.select("href")

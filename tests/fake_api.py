@@ -33,6 +33,35 @@ def make_resource(path: str, i: int, modified: str, name: str | None = None) -> 
     }
 
 
+class RequestRecorder:
+    """``fetch_json`` wrapper that appends each requested URL to a file.
+
+    Offset shards and keyIn batches fetch inside executor Python workers,
+    from pickled copies of the transport, so their requests never reach
+    the driver's ``FakeSriApi.request_log``. This wrapper pickles along
+    with the API it wraps, and every copy appends to the same file, one
+    URL per line."""
+
+    def __init__(self, fetch, path) -> None:
+        self.fetch = fetch
+        self.path = str(path)
+
+    def __call__(self, url: str) -> dict:
+        with open(self.path, "a", encoding="utf-8") as f:
+            f.write(url + "\n")
+        return self.fetch(url)
+
+    def urls(self) -> list[str]:
+        try:
+            with open(self.path, encoding="utf-8") as f:
+                return f.read().splitlines()
+        except FileNotFoundError:
+            return []
+
+    def clear(self) -> None:
+        open(self.path, "w").close()
+
+
 class SyntheticSriApi:
     """Stateless GENERATED SRI API for scale benches (2M+ resources).
 

@@ -299,9 +299,30 @@ def test_dedup_survivors_keeps_min_id_per_cluster(spark):
     assert kept == [1, 5, 7]  # {1,2,3}->1, {7,9}->7, singleton 5 untouched
 
 
+def _union_find_components(edges: list[tuple[int, int]]) -> dict[int, int]:
+    """Driver-side reference: node -> minimum id of its component."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    return {n: min(m for m in parent if find(m) == find(n)) for n in parent}
+
+
+def _components(spark, edges: list[tuple[int, int]]) -> dict[int, int]:
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    return {r.id: r.component for r in D.connected_components(pairs).collect()}
+
+
 @pytest.mark.full  # evidence lane (r13 split): recall/equivalence soak
 def test_connected_components_matches_union_find_on_random_graphs(spark):
-    """Property: min-label propagation equals a driver-side union-find on
+    """Property: connected components equal a driver-side union-find on
     arbitrary edge lists (cycles, self-loops, disconnected chunks)."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
@@ -315,35 +336,17 @@ def test_connected_components_matches_union_find_on_random_graphs(spark):
     )
     @given(st.lists(edge, min_size=1, max_size=25))
     def check(edges):
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            parent[find(a)] = find(b)
-        expected = {n: min(m for m in parent if find(m) == find(n)) for n in parent}
-
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        for algo in ("minlabel", "star"):
-            got = {
-                r.id: r.component
-                for r in D.connected_components(pairs, algorithm=algo).collect()
-            }
-            assert got == expected, algo
+        assert _components(spark, edges) == _union_find_components(edges)
 
     check()
 
 
 def test_connected_components_star_on_stars_chains_and_mixtures(spark):
-    """Large-star/small-star (Kiveris et al. 2014) equals min-label on the
-    shapes that stress it: a giant star (the boilerplate-component skew
-    case it exists for), a long chain (many rounds for min-label, few for
-    star), and a mixture with singles and reversed orientations."""
+    """Large-star/small-star (Kiveris et al. 2014) equals a driver-side
+    union-find on the shapes that stress it: a giant star (the
+    boilerplate-component skew case it exists for), a long chain (many
+    rounds for min-label propagation, few for star), and a mixture with
+    singles and reversed orientations."""
     cases = [
         # giant star centered on a HIGH id: every leaf hangs off 500
         [(500, i) for i in range(1, 60)],
@@ -353,16 +356,7 @@ def test_connected_components_star_on_stars_chains_and_mixtures(spark):
         [(5, 3), (3, 9), (9, 5), (100, 101), (101, 100), (7, 7)],
     ]
     for edges in cases:
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        a = {
-            r.id: r.component
-            for r in D.connected_components(pairs, algorithm="minlabel").collect()
-        }
-        b = {
-            r.id: r.component
-            for r in D.connected_components(pairs, algorithm="star").collect()
-        }
-        assert a == b
+        assert _components(spark, edges) == _union_find_components(edges)
 
 
 def test_curate_corpus_every_stage_drops(spark, docs):
